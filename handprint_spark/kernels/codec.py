@@ -3,12 +3,13 @@
 The sandbox has no PIL/PyMuPDF, and the task rules forbid external
 data, so media columns carry a self-describing synthetic format whose
 *pixels are a pure function of (text, width, height)*. That gives the
-whole preprocessing chain (convert -> resize -> grayscale -> binarize,
-reference images.py:139-240 / manager.py:344-374) a deterministic,
-byte-reproducible meaning: resampling at new dimensions re-renders the
-same function at the new size — a stand-in for PIL's Image.HAMMING that
-preserves the property the pipeline actually relies on (same input
-bytes => same output bytes on every executor, any parallelism).
+preprocessing chain (``preprocess.normalize_media_bytes``: convert ->
+resize -> grayscale -> binarize, reference images.py:139-240 /
+manager.py:344-374) a deterministic, byte-reproducible meaning:
+resampling at new dimensions re-renders the same function at the new
+size — a stand-in for PIL's Image.HAMMING that preserves the property
+the pipeline actually relies on (same input bytes => same output bytes
+on every executor, any parallelism).
 
 Layout (little-endian):
     magic   4s   b"HPM1"
@@ -22,6 +23,10 @@ Layout (little-endian):
     padlen  u32  deterministic incompressible padding (byte-size control)
     pixels  zlib(width*height grayscale bytes, page 1)
     pad     padlen raw bytes from the same keyed stream
+
+``_read`` and ``_write`` are the only code that knows this layout:
+every reader and writer of HPM1 objects, the render kernels included,
+goes through them.
 
 Corrupt inputs raise ``MediaError`` — mapped downstream to error rows,
 never task failures (the reference's row-vs-job error policy,
@@ -99,6 +104,61 @@ def render_pixels(text: str, width: int, height: int, binarized: bool = False) -
     return px
 
 
+def _read(data: bytes) -> tuple[MediaInfo, memoryview, int]:
+    """The one HPM1 reader: parses header, text and pad length.
+    Returns (info, compressed page-1 pixels, pad_len); raises
+    MediaError on empty/corrupt input (reference zero-byte guard
+    manager.py:252-254 and corrupted-image fixture
+    tests/data/bad-images/)."""
+    if data is None or len(data) == 0:
+        raise MediaError("empty media content")
+    if len(data) < _HEADER.size or data[:4] != MAGIC:
+        raise MediaError("not an HPM1 media object")
+    _, fmt_b, width, height, npages, flags, textlen = _HEADER.unpack_from(data, 0)
+    off = _HEADER.size
+    if off + textlen + 4 > len(data):
+        raise MediaError("truncated media object")
+    try:
+        joined = data[off : off + textlen].decode("utf-8")
+    except UnicodeDecodeError as exc:
+        raise MediaError(f"corrupt text payload: {exc}") from exc
+    page_texts = tuple(joined.split("\f")) if joined else ("",)
+    off += textlen
+    (pad_len,) = struct.unpack_from("<I", data, off)
+    info = MediaInfo(
+        fmt_b.rstrip(b"\0").decode("ascii"), width, height, npages, flags,
+        page_texts[0], page_texts, len(data),
+    )
+    return info, memoryview(data)[off + 4 : len(data) - pad_len], pad_len
+
+
+def _write(
+    fmt: str, pages, flags: int, width: int, height: int, pixels: bytes,
+    pad_to: int | None = None,
+) -> bytes:
+    """The one HPM1 writer: header, text, pad length, the given
+    compressed page-1 pixels, and padding up to ``pad_to`` bytes."""
+    joined = "\f".join(pages).encode("utf-8")
+    header = _HEADER.pack(
+        MAGIC, fmt.encode("ascii")[:8].ljust(8, b"\0"), width, height,
+        len(pages), flags, len(joined),
+    )
+    pad_len = max(0, (pad_to or 0) - (len(header) + len(joined) + 4 + len(pixels)))
+    pad = _stream(b"HPM1-pad|" + joined, pad_len)
+    return header + joined + struct.pack("<I", pad_len) + pixels + pad
+
+
+def _inflate(info: MediaInfo, pixels: memoryview) -> bytes:
+    """Decompress the page-1 plane and check it matches the header dims."""
+    try:
+        raw = zlib.decompress(pixels)
+    except zlib.error as exc:
+        raise MediaError(f"corrupt pixel payload: {exc}") from exc
+    if len(raw) != info.width * info.height:
+        raise MediaError("pixel payload does not match dimensions")
+    return raw
+
+
 def encode_media(
     text: str,
     fmt: str = "png",
@@ -111,87 +171,38 @@ def encode_media(
     """Encode a synthetic media object. ``pages`` overrides ``text`` for
     multi-page formats (pdf/tiff); ``pad_to`` grows the encoding with
     incompressible padding to a target byte size (size-cap testing)."""
-    fmt = canonical_format_name(fmt)
     page_texts = pages if pages is not None else [text]
     if not page_texts:
         # a clean MediaError, not an IndexError task failure — the
         # module's errors-are-values policy holds for encode too
         raise MediaError("cannot encode media with zero pages")
-    joined = "\f".join(page_texts).encode("utf-8")
-    flags = FLAG_BINARIZED if binarized else 0
     # level 1: on the sparse ink plane the ratio loss vs level 6 is a few
     # percent while deflate drops from ~35% of extraction CPU to ~10%
     pixels = zlib.compress(
         render_pixels(page_texts[0], width, height, binarized).tobytes(), 1
     )
-    header = _HEADER.pack(
-        MAGIC, fmt.encode("ascii")[:8].ljust(8, b"\0"), width, height,
-        len(page_texts), flags, len(joined),
-    )
-    base_len = len(header) + len(joined) + 4 + len(pixels)
-    pad_len = max(0, (pad_to or 0) - base_len)
-    pad = _stream(b"HPM1-pad|" + joined, pad_len)
-    return header + joined + struct.pack("<I", pad_len) + pixels + pad
+    flags = FLAG_BINARIZED if binarized else 0
+    return _write(canonical_format_name(fmt), page_texts, flags, width, height, pixels, pad_to)
 
 
 def decode_media(data: bytes, verify_pixels: bool = True) -> MediaInfo:
     """Parse header + text of an HPM1 object; raises MediaError on
-    empty/corrupt input (reference zero-byte guard manager.py:252-254
-    and corrupted-image fixture tests/data/bad-images/).
+    empty/corrupt input.
 
     ``verify_pixels=False`` skips the zlib round-trip — only valid for
-    bytes this process just encoded itself (the normalize stage always
-    verifies; the decoder downstream of it need not re-verify)."""
-    if data is None or len(data) == 0:
-        raise MediaError("empty media content")
-    if len(data) < _HEADER.size or data[:4] != MAGIC:
-        raise MediaError("not an HPM1 media object")
-    magic, fmt_b, width, height, npages, flags, textlen = _HEADER.unpack_from(data, 0)
-    off = _HEADER.size
-    if off + textlen + 4 > len(data):
-        raise MediaError("truncated media object")
-    try:
-        joined = data[off : off + textlen].decode("utf-8")
-    except UnicodeDecodeError as exc:
-        raise MediaError(f"corrupt text payload: {exc}") from exc
-    page_texts = tuple(joined.split("\f")) if joined else ("",)
-    off += textlen
-    (pad_len,) = struct.unpack_from("<I", data, off)
-    off += 4
+    bytes this process just encoded or verified itself."""
+    info, pixels, _ = _read(data)
     if verify_pixels:
-        pix_comp = data[off : len(data) - pad_len]
-        try:
-            raw = zlib.decompress(pix_comp)
-        except zlib.error as exc:
-            raise MediaError(f"corrupt pixel payload: {exc}") from exc
-        if len(raw) != width * height:
-            raise MediaError("pixel payload does not match dimensions")
-    return MediaInfo(
-        fmt_b.rstrip(b"\0").decode("ascii"), width, height, npages, flags,
-        page_texts[0], page_texts, len(data),
-    )
+        _inflate(info, pixels)
+    return info
 
 
-def decode_pixels(data: bytes) -> "np.ndarray":
+def decode_pixels(data: bytes) -> np.ndarray:
     """Fully-verified decode returning the page-1 pixel plane
-    (height x width uint8). The stored payload IS the rendered plane
-    (encode writes render_pixels' output), so consumers that need
-    pixels — feature extraction, perceptual hashing — get them from
-    the ONE zlib decompression the integrity check already performs,
-    instead of decode_media + a redundant re-render (2x the per-media
-    work, measured on the mm_phash_dedup path). Raises MediaError on
-    any corruption decode_media would reject."""
-    info = decode_media(data, verify_pixels=False)
-    textlen = len("\f".join(info.pages).encode("utf-8"))
-    off = _HEADER.size + textlen
-    (pad_len,) = struct.unpack_from("<I", data, off)
-    off += 4
-    try:
-        raw = zlib.decompress(data[off : len(data) - pad_len])
-    except zlib.error as exc:
-        raise MediaError(f"corrupt pixel payload: {exc}") from exc
-    if len(raw) != info.width * info.height:
-        raise MediaError("pixel payload does not match dimensions")
+    (height x width uint8) — the stored payload, annotated or rendered.
+    Raises MediaError on any corruption decode_media would reject."""
+    info, pixels, _ = _read(data)
+    raw = _inflate(info, pixels)
     return np.frombuffer(raw, dtype=np.uint8).reshape(info.height, info.width)
 
 
@@ -203,61 +214,13 @@ def swap_format(data: bytes, to_format: str, info: MediaInfo | None = None) -> b
     equivalent to (and ~10x cheaper than) a render+deflate round trip.
     Returns None when the rename is NOT equivalent to a re-encode
     (multi-page object — a re-encode keeps only page 1 — or padded
-    payload — a re-encode drops the pad), so callers fall back."""
+    payload — a re-encode drops the pad), so callers fall back.
+    ``info``, the caller's already-read header, refuses multi-page
+    objects without a second read."""
+    if info is not None and info.npages != 1:
+        return None
+    info, pixels, pad_len = _read(data)
+    if info.npages != 1 or pad_len:
+        return None
     fmt = canonical_format_name(to_format)
-    if info is None:
-        info = decode_media(data, verify_pixels=False)
-    if info.npages != 1:
-        return None
-    textlen = len(info.text.encode("utf-8"))
-    (pad_len,) = struct.unpack_from("<I", data, _HEADER.size + textlen)
-    if pad_len:
-        return None
-    header = _HEADER.pack(
-        MAGIC, fmt.encode("ascii")[:8].ljust(8, b"\0"),
-        info.width, info.height, 1, info.flags, textlen,
-    )
-    return header + data[_HEADER.size :]
-
-
-def convert_media(data: bytes, to_format: str = "png") -> bytes:
-    """Format normalization (reference images.py:197-240 / I5): re-encode
-    as ``to_format``; multi-page sources keep only page 1 (the
-    reference's PDF first-page rule, images.py:211-218, and the
-    page-1-only truncation W4)."""
-    info = decode_media(data)
-    return encode_media(
-        info.text, fmt=to_format, width=info.width, height=info.height,
-        binarized=bool(info.flags & FLAG_BINARIZED),
-    )
-
-
-def resize_media(data: bytes, new_width: int, new_height: int) -> bytes:
-    """Deterministic resample to new dimensions (stand-in for
-    Image.HAMMING in reference images.py:159,187): re-renders the pure
-    pixel function at the new size; text payload unchanged."""
-    info = decode_media(data)
-    return encode_media(
-        info.text, fmt=info.fmt, width=new_width, height=new_height,
-        binarized=bool(info.flags & FLAG_BINARIZED),
-    )
-
-
-def grayscale_media(data: bytes) -> bytes:
-    """Grayscale stage (new-engine stage per SURVEY.md §2.8 north-star
-    note; no reference counterpart). HPM1 pixels are already single
-    channel, so this validates + canonicalizes the object."""
-    info = decode_media(data)
-    return encode_media(
-        info.text, fmt=info.fmt, width=info.width, height=info.height,
-        binarized=bool(info.flags & FLAG_BINARIZED),
-    )
-
-
-def binarize_media(data: bytes) -> bytes:
-    """Adaptive-binarization stage (new-engine stage, SURVEY.md §2.8):
-    thresholds the deterministic render at 128 and sets the flag."""
-    info = decode_media(data)
-    return encode_media(
-        info.text, fmt=info.fmt, width=info.width, height=info.height, binarized=True
-    )
+    return _write(fmt, info.pages, info.flags, info.width, info.height, pixels)

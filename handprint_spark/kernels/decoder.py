@@ -97,18 +97,20 @@ def decode_page(text: str) -> TRResult:
         x1 = max((b.bb[2] for b in boxes), default=MARGIN)
         y1 = MARGIN + (len(lines) - 1) * LINE_PITCH + CHAR_H
         boxes.insert(0, Box("para", _rect(MARGIN, MARGIN, x1, y1), "", page_score))
-    full_text = "\n".join(lines)
-    return TRResult(full_text, boxes, None)
+    return TRResult(page_text(text), boxes, None)
 
 
-def decode_media_bytes(data: bytes, trusted: bool = False) -> TRResult:
+def page_text(text: str) -> str:
+    """The text projection of ``decode_page``: its ``TRResult.text``
+    without building a box."""
+    return "\n".join(text.splitlines())
+
+
+def decode_media_bytes(data: bytes) -> TRResult:
     """media bytes -> TRResult; corrupt media becomes an error value
-    (row-level error policy), never an exception.
-
-    ``trusted=True`` skips pixel re-verification — only for bytes the
-    normalize stage produced (it already fully verified them)."""
+    (row-level error policy), never an exception."""
     try:
-        info = codec.decode_media(data, verify_pixels=not trusted)
+        info = codec.decode_media(data)
     except codec.MediaError as exc:
         return TRResult("", [], str(exc))
     return decode_page(info.text)

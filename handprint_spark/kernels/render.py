@@ -123,10 +123,8 @@ def annotate(
     (zorder 10, images.py:288) anchored at the word box corner plus
     ``shift``, clamped to the page.
 
-    ``trusted=True`` skips the zlib pixel verification — the hot
-    annotate path decodes bytes its caller JUST verified via
-    decode_media_bytes, so re-verifying paid a second decompression
-    per media object for nothing."""
+    ``trusted=True`` skips the zlib pixel verification, for bytes the
+    caller has already verified."""
     info = codec.decode_media(data, verify_pixels=not trusted)
     px = codec.render_pixels(
         info.text, info.width, info.height, bool(info.flags & codec.FLAG_BINARIZED)
@@ -159,28 +157,10 @@ def annotate(
 
 def _encode_with_pixels(info: codec.MediaInfo, px: np.ndarray) -> bytes:
     """Encode an HPM1 object carrying explicit (annotated) pixels."""
-    import struct
     import zlib
 
-    joined = "\f".join(info.pages).encode("utf-8")
-    header = codec._HEADER.pack(
-        codec.MAGIC, info.fmt.encode("ascii")[:8].ljust(8, b"\0"),
-        px.shape[1], px.shape[0], len(info.pages), info.flags, len(joined),
-    )
     pixels = zlib.compress(px.astype(np.uint8).tobytes(), 6)
-    return header + joined + struct.pack("<I", 0) + pixels
-
-
-def decode_pixels(data: bytes) -> np.ndarray:
-    """Read back the actual pixel payload (annotated or rendered)."""
-    import struct
-    import zlib
-
-    info = codec.decode_media(data, verify_pixels=False)
-    off = codec._HEADER.size + len("\f".join(info.pages).encode("utf-8"))
-    (pad_len,) = struct.unpack_from("<I", data, off)
-    raw = zlib.decompress(data[off + 4 : len(data) - pad_len])
-    return np.frombuffer(raw, dtype=np.uint8).reshape(info.height, info.width)
+    return codec._write(info.fmt, info.pages, info.flags, px.shape[1], px.shape[0], pixels)
 
 
 def make_grid(images: list[bytes], max_horizontal: int = 4) -> bytes:
@@ -194,7 +174,7 @@ def make_grid(images: list[bytes], max_horizontal: int = 4) -> bytes:
     if n == 0:
         return codec.encode_media("", width=1, height=1)
     cols = min(n, min(max_horizontal, math.ceil(math.sqrt(n))) or 1)
-    pixmaps = [decode_pixels(im) for im in images]
+    pixmaps = [codec.decode_pixels(im) for im in images]
     rows = math.ceil(n / cols)
     # grid index assignment (W2): h = i % cols, v = i // cols
     col_w = [0] * cols

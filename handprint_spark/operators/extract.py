@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corpus import SPAN_TYPE
-from ..kernels.decoder import decode_page
+from ..kernels.decoder import page_text
 from ..kernels.formats import KNOWN_SERVICES, fold_limits
 from ..kernels.preprocess import decode_media_text
 
@@ -89,18 +89,15 @@ def extract_one(
                             "media_ref": ref, "offset": offset})
                 n_errors += 1
                 continue
-            # fused I8+X9 (kernels/preprocess.decode_media_text): full
-            # verification, identical error surface, no dead re-encode —
-            # every normalize stage is text-invariant so the span output
-            # is byte-identical to the normalize-then-decode chain
-            # (asserted against it in test_extract_pipeline)
+            # every normalize stage is text-invariant, so the span equals
+            # the normalize-then-decode chain's (test_extract_pipeline)
             text_out, err = decode_media_text(content)
             if err is not None:
                 out.append({"kind": "error", "text": err, "media_ref": ref, "offset": offset})
                 n_errors += 1
             else:
-                tr = decode_page(text_out)
-                out.append({"kind": "ocr", "text": tr.text, "media_ref": ref, "offset": offset})
+                out.append({"kind": "ocr", "text": page_text(text_out),
+                            "media_ref": ref, "offset": offset})
         else:
             out.append({"kind": kind, "text": text, "media_ref": ref, "offset": offset})
     return (doc_id, out, n_media, n_errors)

@@ -61,11 +61,11 @@ def media_features(spans_with_media: DataFrame) -> DataFrame:
                                  "null media content"))
                     continue
                 try:
-                    info = codec.decode_media(bytes(content))
-                    px = codec.render_pixels(
-                        info.text, info.width, info.height,
-                        bool(info.flags & codec.FLAG_BINARIZED),
-                    )
+                    # the stored payload is the page-1 render: one
+                    # decompression verifies it and yields the pixels
+                    data = bytes(content)
+                    px = codec.decode_pixels(data)
+                    info = codec.decode_media(data, verify_pixels=False)
                     rows.append(
                         (doc_id, ref, info.fmt, info.width, info.height,
                          info.npages, len(content), round(float(np.mean(px)), 4), None)

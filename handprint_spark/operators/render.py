@@ -62,6 +62,9 @@ def annotated_media(
         for pdf in batches:
             rows = []
             for doc_id, ref, content in zip(pdf["doc_id"], pdf["media_ref"], pdf["content"]):
+                if content is None:  # an error row, never bytes(None)
+                    rows.append((doc_id, ref, None, 0, "null media content"))
+                    continue
                 content = bytes(content)
                 tr = decode_media_bytes(content)
                 if tr.error is not None:
@@ -69,9 +72,7 @@ def annotated_media(
                     continue
                 boxes = [b._asdict() for b in tr.boxes]
                 try:
-                    # trusted: decode_media_bytes just verified these
-                    # bytes — re-verifying in annotate paid a second
-                    # zlib decompression per media object
+                    # trusted: decode_media_bytes just verified these bytes
                     out = annotate(content, boxes, score_threshold, kinds,
                                    display=display, shift=shift, trusted=True)
                     rows.append((doc_id, ref, out, len(boxes), None))

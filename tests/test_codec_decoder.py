@@ -44,14 +44,16 @@ def test_multipage_keeps_page1_on_convert():
     # reference PDF rule: first page only (images.py:211-218)
     b = codec.encode_media("", fmt="pdf", width=64, height=64, pages=["page one", "page two"])
     assert codec.decode_media(b).npages == 2
-    png = codec.convert_media(b, "png")
+    png, err = normalize_media_bytes(b, None, None, None)
+    assert err is None
     info = codec.decode_media(png)
-    assert info.npages == 1 and info.text == "page one"
+    assert info.fmt == "png" and info.npages == 1 and info.text == "page one"
 
 
 def test_resize_preserves_text():
     b = codec.encode_media(TEXT, width=300, height=200)
-    r = codec.resize_media(b, 30, 20)
+    r, err = normalize_media_bytes(b, None, 30, 20)
+    assert err is None
     info = codec.decode_media(r)
     assert (info.width, info.height) == (30, 20)
     assert info.text == TEXT
@@ -59,11 +61,11 @@ def test_resize_preserves_text():
 
 def test_binarize_flags_and_pixels():
     b = codec.encode_media(TEXT, width=16, height=16)
-    bz = codec.binarize_media(b)
+    bz, err = normalize_media_bytes(b, None, None, None, binarize=True)
+    assert err is None
     info = codec.decode_media(bz)
     assert info.flags & codec.FLAG_BINARIZED
-    px = codec.render_pixels(TEXT, 16, 16, binarized=True)
-    assert set(px.flatten().tolist()) <= {0, 255}
+    assert set(codec.decode_pixels(bz).flatten().tolist()) <= {0, 255}
 
 
 def test_normalize_chain_converts_and_caps():

@@ -170,7 +170,7 @@ def test_fused_decode_equals_normalize_then_decode():
     values — across normal, multi-page, padded, corrupt, and empty
     media."""
     from handprint_spark.kernels import codec
-    from handprint_spark.kernels.decoder import decode_media_bytes
+    from handprint_spark.kernels.decoder import decode_media_bytes, decode_page
     from handprint_spark.kernels.formats import KNOWN_SERVICES, fold_limits
     from handprint_spark.kernels.preprocess import (
         decode_media_text,
@@ -191,13 +191,32 @@ def test_fused_decode_equals_normalize_then_decode():
         fused_text, fused_err = decode_media_text(data)
         normalized, err = normalize_media_bytes(data, max_size, mw, mh)
         if err is None:
-            tr = decode_media_bytes(normalized, trusted=True)
+            tr = decode_media_bytes(normalized)
             chain_text, chain_err = tr.text, tr.error
         else:
             chain_text, chain_err = None, err
         assert fused_err == chain_err
         if fused_err is None:
             assert fused_text == chain_text
+        assert _ocr_span(data, max_size, mw, mh)["text"] == (
+            chain_text if chain_err is None else chain_err
+        )
+    # page texts whose line structure decode_page rewrites: the
+    # flagship's ocr span carries decode_page's text for each
+    for text in ("a\r\nb", "trailing\n", " ", "one\n\n\ntwo\n", "\n\n", "",
+                 "x\ry\u2028z  w"):
+        span = _ocr_span(codec.encode_media(text), max_size, mw, mh)
+        assert span == {"kind": "ocr", "text": decode_page(text).text,
+                        "media_ref": "d/page-0", "offset": 0}
+
+
+def _ocr_span(data, max_size, mw, mh):
+    """extract_one's single output span for a one-media document."""
+    spans = [{"kind": "page_image", "text": None, "media_ref": "d/page-0", "offset": 0}]
+    media = [{"media_ref": "d/page-0", "content": data}]
+    _, out, n_media, _ = extract_one("d", spans, media, max_size, mw, mh)
+    assert n_media == 1 and len(out) == 1
+    return out[0]
 
 
 def test_spanify_empty_text_matches_python_twin(spark):

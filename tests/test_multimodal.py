@@ -194,3 +194,26 @@ def test_media_features_null_content_is_error_row(spark):
     rows = media_features(df).collect()
     assert len(rows) == 1
     assert rows[0].error == "null media content" and rows[0].byte_size == 0
+
+
+def test_media_features_mean_pixel_equals_render(spark):
+    """mean_pixel is the mean of the page-1 render, for plain,
+    binarized and multi-page media."""
+    import numpy as np
+
+    cases = {  # doc_id -> (media bytes, page-1 render arguments)
+        "d1": (codec.encode_media("plain text", width=96, height=40),
+               ("plain text", 96, 40, False)),
+        "d2": (codec.encode_media("inked", width=64, height=48, binarized=True),
+               ("inked", 64, 48, True)),
+        "d3": (codec.encode_media("", fmt="pdf", width=80, height=32,
+                                  pages=["page one", "page two"]),
+               ("page one", 80, 32, False)),
+    }
+    df = _df_with_media(spark, [(d, f"{d}/img-0", data) for d, (data, _) in cases.items()])
+    got = {r.doc_id: r for r in media_features(df).collect()}
+    for doc_id, (_, render_args) in cases.items():
+        assert got[doc_id].error is None
+        px = codec.render_pixels(*render_args)
+        assert got[doc_id].mean_pixel == round(float(np.mean(px)), 4)
+    assert got["d3"].n_pages == 2

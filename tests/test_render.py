@@ -5,7 +5,8 @@ import pytest
 
 from handprint_spark.kernels import codec
 from handprint_spark.kernels.decoder import decode_page
-from handprint_spark.kernels.render import annotate, decode_pixels, make_grid
+from handprint_spark.kernels.codec import decode_pixels
+from handprint_spark.kernels.render import annotate, make_grid
 
 
 def _page(text="alpha beta\ngamma", w=160, h=64):
@@ -146,8 +147,8 @@ def test_doc_grids_tiles_in_natural_reading_order(spark):
     scrambled any document with 10+ crops. Pin with 12 distinct-dim
     crops: the grid's total size reproduces only under numeric order
     and the first tile's pixels are line-0's."""
-    from handprint_spark.kernels.codec import encode_media
-    from handprint_spark.kernels.render import decode_pixels, make_grid
+    from handprint_spark.kernels.codec import decode_pixels, encode_media
+    from handprint_spark.kernels.render import make_grid
     from handprint_spark.operators.render import doc_grids
 
     crops = [
@@ -162,3 +163,18 @@ def test_doc_grids_tiles_in_natural_reading_order(spark):
     expected = make_grid(crops)  # natural order 0..11
     assert bytes(got.grid) == expected
     assert decode_pixels(bytes(got.grid)) is not None
+
+
+def test_annotated_media_null_content_is_error_row(spark):
+    """A media struct with NULL content yields an error ROW, never a
+    job-killing bytes(None) TypeError."""
+    from handprint_spark.operators.render import annotated_media
+
+    df = spark.createDataFrame(
+        [("d1", [{"media_ref": "d1/line-0", "content": None}])],
+        "doc_id string, media array<struct<media_ref:string,content:binary>>",
+    )
+    rows = annotated_media(df).collect()
+    assert len(rows) == 1
+    assert rows[0].error == "null media content"
+    assert rows[0].annotated is None and rows[0].n_boxes == 0
