@@ -5,10 +5,11 @@ Spark pipeline, runnable as ``python -m handprint_spark`` or via
 
 Option-by-option mapping (reference flag -> this engine):
 
-  -l  list known services            -> same (service_fanout.SERVICES)
+  -l  list known services            -> same (formats.KNOWN_SERVICES)
   -V  version                        -> same
-  -s  services to invoke             -> extract_documents(services=...)
-                                        + per-service fan-out sink
+  -s  services to invoke             -> validated; the local decoder
+                                        has no per-service limit that
+                                        changes text
   -o  output directory               -> table-sink root (parquet dirs;
                                         on a cluster: catalog tables)
   -t  threads (default #cores/2)     -> local[N] / session parallelism
@@ -58,6 +59,7 @@ if __package__ in (None, ""):  # pragma: no cover — spark-submit path
 
 from . import __version__
 from .errors import CannotProceed, ExitCode, run_with_exit_code
+from .kernels.formats import KNOWN_SERVICES
 
 KNOWN_DISPLAYS = (
     "text", "bb", "bb-word", "bb-words", "bb-line", "bb-lines",
@@ -116,20 +118,17 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _parse_services(arg: str) -> list[str]:
-    from .operators.service_fanout import SERVICES
-
+def _check_services(arg: str) -> None:
     if arg.strip().lower() == "all":
-        return list(SERVICES)
+        return
     names = [s.strip() for s in arg.split(",") if s.strip()]
-    unknown = [s for s in names if s not in SERVICES]
+    unknown = [s for s in names if s not in KNOWN_SERVICES]
     if unknown:
         raise CannotProceed(
             ExitCode.bad_arg,
             f"unknown service(s): {', '.join(unknown)} "
-            f"(known: {', '.join(SERVICES)})",
+            f"(known: {', '.join(KNOWN_SERVICES)})",
         )
-    return names
 
 
 def _parse_display(arg: str) -> tuple[str, ...]:
@@ -164,13 +163,11 @@ def run_cli(argv: list[str] | None = None) -> int:
         print(f"handprint_spark {__version__}")
         return 0
     if args.list:
-        from .operators.service_fanout import SERVICES
-
-        print("Known services: " + ", ".join(SERVICES))
+        print("Known services: " + ", ".join(KNOWN_SERVICES))
         return 0
     if args.add_creds:
         svc, path = args.add_creds
-        _parse_services(svc)  # validates the service name
+        _check_services(svc)
         if not os.path.isfile(path):
             raise FileNotFoundError(path)
         print(
@@ -180,7 +177,7 @@ def run_cli(argv: list[str] | None = None) -> int:
         )
         return 0
 
-    services = _parse_services(args.services)
+    _check_services(args.services)
     display = _parse_display(args.display)
     shift = _parse_shift(args.text_move)
     if not 0.0 <= args.confidence <= 1.0:
@@ -290,9 +287,7 @@ def run_cli(argv: list[str] | None = None) -> int:
         if keep_filter is not None:
             docs = keep_filter(docs)
         spans = spanify(docs)
-        metrics = run_batch(
-            spark, spans, results_dir, lineage_dir, batch_id, services=services
-        )
+        metrics = run_batch(spark, spans, results_dir, lineage_dir, batch_id)
         total_docs += metrics["docs"]
         if not args.quiet:
             print(

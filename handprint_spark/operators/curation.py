@@ -222,9 +222,9 @@ def q_cur_report_approx(spark, sf_dir):
 
 def run_curation_batch(spark, sf_dir, keep_dir, lineage_dir, batch_id: int) -> dict:
     """One resumable curation batch through the SAME checkpoint
-    protocol as extraction (sources/checkpoints.py): keep-list
-    anti-join the keep sink → append new keepers → append
-    per-partition lineage. A re-run after any failure appends exactly
+    protocol as extraction: keep-list anti-join the keep sink →
+    ``checkpoints.commit_batch`` (append new keepers, then
+    per-partition lineage). A re-run after any failure appends exactly
     the missing doc_ids (keep-list membership is a pure function of
     the corpus, so resumed-and-restarted sinks are equal as sets —
     the same determinism argument as X9 extraction resume).
@@ -232,35 +232,13 @@ def run_curation_batch(spark, sf_dir, keep_dir, lineage_dir, batch_id: int) -> d
     Steady-state I/O: one read of the corpus, one anti-join against
     the keep sink's doc_id column (column-pruned scan), one results
     append, one lineage append. Returns batch metrics."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..sources import table_sink
-    from ..sources.checkpoints import pending_work
+    from ..sources.checkpoints import commit_batch, pending_work
 
     todo = pending_work(spark, q_cur_keep_list(spark, sf_dir), keep_dir)
-    results = todo.withColumn("batch_id", F.lit(batch_id)).withColumn(
-        "partition_id", F.spark_partition_id()
+    lineage_rows = commit_batch(
+        spark, todo, keep_dir, lineage_dir, batch_id,
+        F.sum("n_copies").alias("n_represented"),
     )
-    results.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # lineage snapshot BEFORE the sink append (same recomputation
-        # argument as checkpoints.run_batch: the plan anti-joins the
-        # sink it is about to mutate)
-        lineage_rows = (
-            results.groupBy("batch_id", "partition_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_copies").alias("n_represented"),
-                F.min("doc_id").alias("min_doc"),
-                F.max("doc_id").alias("max_doc"),
-            )
-            .collect()
-        )
-        table_sink.append(results, keep_dir)
-    finally:
-        results.unpersist()
-    if lineage_rows:
-        table_sink.append(spark.createDataFrame(lineage_rows), lineage_dir)
     return {
         "batch_id": batch_id,
         "kept": sum(r["n_docs"] for r in lineage_rows),

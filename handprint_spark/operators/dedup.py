@@ -577,20 +577,6 @@ def _band_keys_udf(bands: int = EMB_BANDS, bits: int = EMB_BAND_BITS):
     return band_keys
 
 
-def _pair_cos_udf():
-    @F.pandas_udf("double")
-    def pair_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        A = np.stack(a.values).astype(np.float64)
-        B = np.stack(b.values).astype(np.float64)
-        num = (A * B).sum(axis=1)
-        den = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
-        return pd.Series(np.round(num / den, 4))
-
-    return pair_cos
-
-
 def _score_bucket_fn(threshold: float, first_band_dedup: bool):
     """applyInPandas kernel for one LSH bucket (or salted sub-chunk):
     score every in-group pair with ONE n x n matmul; each vector

@@ -4,7 +4,7 @@ Re-expresses the reference's scan → normalize → extract → unify
 dataflow (reference manager.py:132-196 outer loop + per-document
 _normalized/_send) as one *narrow* Spark plan:
 
-    scan documents_spans → [optional repartition by hash(doc_id)]
+    scan documents_spans
     → mapInPandas(normalize ∘ decode over media spans) → sink
 
 Design notes for 100 TB (SURVEY.md §4):
@@ -41,7 +41,6 @@ from pyspark.sql import types as T
 
 from ..corpus import SPAN_TYPE
 from ..kernels.decoder import page_text
-from ..kernels.formats import KNOWN_SERVICES, fold_limits
 from ..kernels.preprocess import decode_media_text
 
 MEDIA_KINDS = ("page_image", "line_image", "word_image")
@@ -67,13 +66,11 @@ def extract_one(
     """Pure per-document kernel — also runs sequentially on the driver
     as the reference path of the span-sequence-equality tests.
 
-    The limit parameters are retained in the signature (they are the
-    A1 min-fold contract and still select resize behavior for media
-    OUTPUT consumers) but the fused text path does not consume them:
-    the normalize stages are text-invariant by construction — the
-    reference RESIZES oversized media rather than rejecting it
-    (images.py:149-157), so no limit value can change the decoded
-    text or the error surface (proved by
+    ``max_size``, ``max_width`` and ``max_height`` are unused
+    (``extract_documents`` passes ``None``): the normalize stages are
+    text-invariant by construction — the reference RESIZES oversized
+    media rather than rejecting it (images.py:149-157), so no limit
+    value can change the decoded text or the error surface (proved by
     test_fused_decode_equals_normalize_then_decode)."""
     # ``media``/``spans`` may arrive as numpy arrays from Arrow — avoid
     # truthiness on them.
@@ -103,39 +100,18 @@ def extract_one(
     return (doc_id, out, n_media, n_errors)
 
 
-def extract_documents(
-    df: DataFrame,
-    services: list[str] | tuple[str, ...] = KNOWN_SERVICES,
-    max_size: Optional[int] = None,
-    max_dimensions: Optional[tuple[int, int]] = None,
-    partitions: Optional[int] = None,
-) -> DataFrame:
-    """documents_spans(doc_id, spans, media) -> results.
-
-    Service limits min-fold (reference manager.py:104-123) happens on
-    the driver — it is a constant-fold over a 4-row dim table, not a
-    distributed agg — and the scalars are closed over by the UDF
-    (broadcast-by-closure).
-    """
-    folded_size, folded_dims = fold_limits(list(services))
-    if max_size is None:
-        max_size = folded_size
-    if max_dimensions is None:
-        max_dimensions = folded_dims
-    max_w, max_h = max_dimensions if max_dimensions else (None, None)
-
-    if partitions:
-        # Explicit doc-hash partitioning (north_rule). Only needed when
-        # the source's file-split parallelism is poor or skewed;
-        # otherwise the narrow plan inherits scan partitioning.
-        df = df.repartition(partitions, F.hash("doc_id"))
+def extract_documents(df: DataFrame) -> DataFrame:
+    """documents_spans(doc_id, spans, media) -> results. The narrow
+    plan inherits the input's partitioning; repartition first
+    (``plans.partitioning.repartition_by_doc``) when the source's
+    file-split parallelism is poor or skewed."""
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
             rows = [
-                extract_one(d, s, m, max_size, max_w, max_h)
+                extract_one(d, s, m, None, None, None)
                 for d, s, m in zip(pdf["doc_id"], pdf["spans"], pdf["media"])
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "spans", "n_media", "n_errors"])

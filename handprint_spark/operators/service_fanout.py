@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..corpus import load_documents_spans
 from ..kernels.decoder import decode_page
+from ..kernels.formats import KNOWN_SERVICES
 from ..kernels.normalizers import (
     emit_google,
     emit_microsoft,
@@ -50,7 +51,7 @@ from .extract import extract_documents, extracted_text
 from .normalize_json import PARSERS
 
 FAN_W, FAN_H = 1000, 800  # percent-coordinate basis for the Amazon shapes
-SERVICES = ("amazon-textract", "amazon-rekognition", "google", "microsoft")
+SERVICES = KNOWN_SERVICES  # public alias of the one service list
 
 
 def _score_sum_x1000(boxes: Column) -> Column:
@@ -93,7 +94,7 @@ def q_xsvc_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = extracted_text(results, kinds=("ocr",)).select("doc_id", "text")
     raw = service_raw_fanout(pages).localCheckpoint()  # materialize once
     branches = []
-    for svc in SERVICES:
+    for svc in KNOWN_SERVICES:
         parsed = PARSERS[svc](raw.filter(F.col("service") == svc), "raw", "width", "height")
         branches.append(
             parsed.select(

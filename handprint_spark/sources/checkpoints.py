@@ -25,7 +25,7 @@ equal as sets — asserted by tests/test_resume.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -46,61 +46,84 @@ def pending_work(spark: SparkSession, spans_df: DataFrame, results_dir: str) -> 
     return spans_df.join(done.select("doc_id"), "doc_id", "left_anti")
 
 
+def commit_batch(
+    spark: SparkSession,
+    rows: DataFrame,
+    results_dir: str,
+    lineage_dir: str,
+    batch_id: int,
+    *counts: Column,
+) -> list:
+    """The one commit routine every resumable writer goes through:
+    tag ``rows`` with ``batch_id``/``partition_id``, append them to
+    ``results_dir``, then append one lineage row per partition,
+    ``(batch_id, partition_id, n_docs, *counts, min_doc, max_doc)``,
+    to ``lineage_dir``. ``counts`` are aliased aggregate columns over
+    ``rows``. Returns the lineage rows (one per partition —
+    driver-small by construction), so callers derive their metrics
+    without a second aggregation pass or a rescan of either sink.
+
+    ``results_dir``/``lineage_dir`` may be parquet paths or catalog
+    table identifiers (table_sink) — with an Iceberg catalog the two
+    appends become one atomic transaction."""
+    rows = rows.withColumn("batch_id", F.lit(batch_id)).withColumn(
+        "partition_id", F.spark_partition_id()
+    )
+    # cache so the results append reads this batch's output instead of
+    # recomputing it
+    rows.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        # Lineage FIRST, append second: the plan under `rows`
+        # anti-joins the results sink (pending_work), so any
+        # recomputation after the append would see its own output and
+        # resolve to empty. Taking the lineage snapshot (which also
+        # materializes the cache) before the sink mutates keeps every
+        # recomputation of this plan equal to what gets written.
+        lineage_rows = (
+            rows.groupBy("batch_id", "partition_id")
+            .agg(
+                F.count("*").alias("n_docs"),
+                *counts,
+                F.min("doc_id").alias("min_doc"),
+                F.max("doc_id").alias("max_doc"),
+            )
+            .collect()
+        )
+        table_sink.append(rows, results_dir)  # reads the cache
+    finally:
+        rows.unpersist()
+    if lineage_rows:
+        table_sink.append(spark.createDataFrame(lineage_rows), lineage_dir)
+    return lineage_rows
+
+
 def run_batch(
     spark: SparkSession,
     spans_df: DataFrame,
     results_dir: str,
     lineage_dir: str,
     batch_id: int,
-    **extract_kwargs,
 ) -> dict:
-    """One resumable batch: anti-join → extract → append results →
-    append per-partition lineage. Returns batch metrics.
+    """One resumable batch: anti-join → extract → ``commit_batch``.
+    Returns batch metrics.
 
     Steady-state I/O contract (the shape that must hold at 10^12
-    rows): ONE read of the input, ONE write of results, ONE write of
-    lineage, ZERO reads of the (ever-growing) results table. The
-    per-partition lineage aggregates the batch's own (cached) output,
-    never a rescan of the sink, and the collected lineage rows (one
-    per partition — driver-small by construction) also supply the
-    return metrics, so no second aggregation pass exists at all.
-    ``results_dir``/``lineage_dir`` may be parquet paths or catalog
-    table identifiers (table_sink) — with an Iceberg catalog the two
-    appends become one atomic transaction."""
+    rows): ONE read of the input, ONE read of the results table's
+    ``doc_id`` column (the ``pending_work`` anti-join), ONE write of
+    results, ONE write of lineage. The per-partition lineage
+    aggregates the batch's own (cached) output, never a rescan of the
+    sink, and the collected lineage rows also supply the return
+    metrics."""
     todo = pending_work(spark, spans_df, results_dir)
-    results = (
-        extract_documents(todo, **extract_kwargs)
-        .withColumn("batch_id", F.lit(batch_id))
-        .withColumn("partition_id", F.spark_partition_id())
+    lineage_rows = commit_batch(
+        spark,
+        extract_documents(todo),
+        results_dir,
+        lineage_dir,
+        batch_id,
+        F.sum("n_media").alias("n_media"),
+        F.sum("n_errors").alias("n_errors"),
     )
-    # cache so the results append reads this batch's output instead of
-    # recomputing it; results rows are text spans (no media blobs).
-    results.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # Lineage FIRST, append second: the plan under `results`
-        # anti-joins the results sink, so any recomputation after the
-        # append would see its own output and resolve to empty. Taking
-        # the lineage snapshot (which also materializes the cache)
-        # before the sink mutates keeps every recomputation of this
-        # plan equal to what gets written.
-        lineage_rows = (
-            results.groupBy("batch_id", "partition_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_media").alias("n_media"),
-                F.sum("n_errors").alias("n_errors"),
-                F.min("doc_id").alias("min_doc"),
-                F.max("doc_id").alias("max_doc"),
-            )
-            .collect()  # one row per partition: driver-small
-        )
-        table_sink.append(results, results_dir)  # reads the cache
-    finally:
-        results.unpersist()
-    if lineage_rows:
-        lineage = spark.createDataFrame(lineage_rows)
-        table_sink.append(lineage, lineage_dir)
-
     return {
         "batch_id": batch_id,
         "docs": sum(r["n_docs"] for r in lineage_rows),

@@ -75,11 +75,12 @@ def stream_to_results(
     batch protocol writes: every micro-batch runs the full
     ``checkpoints.run_batch`` path (anti-join → spanify → extract →
     append results → append lineage), so batch and streaming writers
-    are interchangeable consumers of one sink. Exactly-once lands on
-    two independent guards: Structured Streaming's checkpointLocation
-    (no re-delivered files after restart) and the doc_id anti-join
-    (a replayed micro-batch re-selects zero documents) — either alone
-    suffices, together a crashed stream resumes exactly like a crashed
+    are interchangeable consumers of one sink. The checkpointLocation
+    keeps a restarted stream from re-reading committed files, but
+    ``foreachBatch`` is at-least-once: a replayed micro-batch re-runs
+    ``process``. The doc_id anti-join is what keeps results
+    exactly-once — a replay re-selects zero documents already in the
+    results table — so a crashed stream resumes exactly like a crashed
     batch run. Returns an unstarted DataStreamWriter; callers pick the
     trigger (tests use availableNow)."""
     from ..sources.checkpoints import run_batch

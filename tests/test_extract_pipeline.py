@@ -18,6 +18,7 @@ from handprint_spark.operators.extract import (
     extract_one,
     extracted_text,
 )
+from handprint_spark.plans.partitioning import repartition_by_doc
 
 MAX_SIZE, MAX_DIMS = fold_limits(["amazon-textract", "amazon-rekognition", "google", "microsoft"])
 
@@ -59,8 +60,8 @@ def test_span_sequence_equality(results, sf_tiny):
 def test_distribution_invariance(spark, sf_tiny, results):
     """Same input at a different partitioning must produce identical
     spans (sandbox stand-in for N vs 4N executors)."""
-    df = load_documents_spans(spark, sf_tiny)
-    alt = extract_documents(df, partitions=7).collect()
+    df = repartition_by_doc(load_documents_spans(spark, sf_tiny), 7)
+    alt = extract_documents(df).collect()
     base = {r.doc_id: _span_tuples_from_row(r) for r in results}
     assert len(alt) == len(base)
     for row in alt:

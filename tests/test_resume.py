@@ -154,3 +154,96 @@ def test_curation_run_is_resumable(spark, sf_tiny, tmp_path):
     assert m2["kept"] == 0
     got2 = [r.doc_id for r in table_sink.load(spark, keep_dir).collect()]
     assert sorted(got2) == sorted(full)
+
+
+class _CrashBeforeLineage(RuntimeError):
+    pass
+
+
+def _crash_once_before_lineage(monkeypatch, lineage_dir):
+    """Make the next lineage append raise: the results append has
+    committed, the lineage append never happens — a driver crash
+    between the two writes of ``checkpoints.commit_batch``."""
+    from handprint_spark.sources import checkpoints
+
+    orig = checkpoints.table_sink.append
+    armed = [True]
+
+    def append(df, target):
+        if armed and target == lineage_dir:
+            armed.clear()
+            raise _CrashBeforeLineage(target)
+        return orig(df, target)
+
+    monkeypatch.setattr(checkpoints.table_sink, "append", append)
+
+
+def test_crash_between_results_and_lineage_resumes_exactly(
+    spark, sf_tiny, dirs, monkeypatch
+):
+    """Results win: the crashed batch's rows stay (orphaned, with no
+    lineage row), the next batch extracts only the missing docs, and
+    the table equals a single run span for span."""
+    results_dir, lineage_dir = dirs
+    spans = _spans(spark, sf_tiny)
+
+    _crash_once_before_lineage(monkeypatch, lineage_dir)
+    with pytest.raises(_CrashBeforeLineage):
+        run_batch(spark, spans.limit(50), results_dir, lineage_dir, batch_id=0)
+    assert spark.read.parquet(results_dir).count() == 50
+
+    m = run_batch(spark, spans, results_dir, lineage_dir, batch_id=1)
+    assert m["docs"] == spans.count() - 50
+
+    rows = spark.read.parquet(results_dir).collect()
+    doc_ids = [r.doc_id for r in rows]
+    assert len(doc_ids) == len(set(doc_ids))
+    resumed = {
+        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
+        for r in rows
+    }
+    fresh = {
+        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
+        for r in extract_documents(spans).collect()
+    }
+    assert resumed == fresh
+
+    lineage = spark.read.parquet(lineage_dir).collect()
+    assert {r.batch_id for r in lineage} == {1}
+    assert sum(r.n_docs for r in lineage) == sum(r.batch_id == 1 for r in rows)
+
+
+def test_curation_crash_between_results_and_lineage_resumes_exactly(
+    spark, sf_tiny, tmp_path, monkeypatch
+):
+    """The same crash point through ``run_curation_batch``: a batch
+    over half the keep list crashes before its lineage append, the
+    next batch appends exactly the other half."""
+    from handprint_spark.operators import curation
+    from handprint_spark.sources import table_sink
+
+    keep_dir = str(tmp_path / "keep")
+    lineage_dir = str(tmp_path / "lineage")
+    keep_list = curation.q_cur_keep_list
+    full = sorted(r.doc_id for r in keep_list(spark, sf_tiny).collect())
+    half = full[: len(full) // 2]
+    assert half
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            curation,
+            "q_cur_keep_list",
+            lambda s, d: keep_list(s, d).filter(F.col("doc_id").isin(half)),
+        )
+        _crash_once_before_lineage(m, lineage_dir)
+        with pytest.raises(_CrashBeforeLineage):
+            curation.run_curation_batch(spark, sf_tiny, keep_dir, lineage_dir, batch_id=0)
+
+    m2 = curation.run_curation_batch(spark, sf_tiny, keep_dir, lineage_dir, batch_id=1)
+    assert m2["kept"] == len(full) - len(half)
+
+    rows = table_sink.load(spark, keep_dir).collect()
+    assert sorted(r.doc_id for r in rows) == full  # no dupes, nothing missing
+    lineage = table_sink.load(spark, lineage_dir).collect()
+    assert {r.batch_id for r in lineage} == {1}
+    assert sum(r.n_docs for r in lineage) == sum(r.batch_id == 1 for r in rows)
