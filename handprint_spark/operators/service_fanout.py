@@ -202,7 +202,7 @@ FROM texts
 def q_flagship_skew_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship extraction run THROUGH the skew-splitting path
     (plans/partitioning.extract_skew_aware) with a deliberately low
-    threshold, so the chunk/explode/reassemble machinery — not just the
+    threshold, so the split/shuffle/reassemble machinery — not just the
     narrow path — is exercised under the driver's value-hash gate.
     Every skewed doc (SKEW_FACTOR x lines) and any long normal doc
     crosses the threshold, splits into 8-media chunks, extracts in

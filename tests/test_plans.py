@@ -5,8 +5,9 @@ and skew-aware extraction returns identical results."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from handprint_spark.corpus import load_documents_spans
+from handprint_spark.corpus import MEDIA_TYPE, SPAN_TYPE, encode_line_media, load_documents_spans
 from handprint_spark.operators.extract import extract_documents
 from handprint_spark.operators.relational import (
     q_j1_broadcast_join,
@@ -71,41 +72,149 @@ def test_skew_aware_equals_plain(spark, sf_tiny):
     spans.unpersist()
 
 
+def _span_key(r):
+    return ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans], r.n_media, r.n_errors)
+
+
+DOC_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("spans", SPAN_TYPE),
+        T.StructField("media", MEDIA_TYPE),
+    ]
+)
+
+
+def _docs_frame(spark, docs):
+    """(doc_id, spans, media) rows from (doc_id, span tuples, media
+    (ref, line) pairs); a media line of None stands for garbage bytes."""
+    rows = [
+        (
+            doc_id,
+            [{"kind": k, "text": t, "media_ref": r, "offset": o} for k, t, r, o in spans],
+            [
+                {"media_ref": ref,
+                 "content": b"garbage" if line is None else encode_line_media(doc_id, i, line)}
+                for i, (ref, line) in enumerate(media)
+            ],
+        )
+        for doc_id, spans, media in docs
+    ]
+    return spark.createDataFrame(rows, DOC_SCHEMA)
+
+
+def _interleaved(n_media, text_per_media=1, tail=0):
+    """text_per_media text spans before each media span, then ``tail``
+    trailing text spans; offsets count up from 0."""
+    spans = []
+    for i in range(n_media):
+        spans += [("text", f"t{i}-{t}", "") for t in range(text_per_media)]
+        spans.append(("line_image", "", f"line-{i}"))
+    spans += [("text", f"tail{t}", "") for t in range(tail)]
+    media = [(f"line-{i}", f"w{i}") for i in range(n_media)]
+    return [s + (o,) for o, s in enumerate(spans)], media
+
+
 def test_skew_aware_general_layout(spark):
     """Chunking must not assume the corpus's 2-spans-per-media
-    interleave: a layout with 3 text spans per media, media-only runs,
-    and trailing text spans must chunk to the same result as the plain
-    path (round 2 hardcoded the 2:1 slice and would mis-assign here)."""
-    from handprint_spark.corpus import MEDIA_TYPE, SPAN_TYPE, encode_line_media
-    from pyspark.sql import types as T
+    interleave or a well-formed document: every layout below must chunk
+    to the same result as the plain path."""
+    import random
 
-    spans, media = [], []
-    off = 0
-    for i in range(9):  # 9 media spans, threshold 4 -> 3 chunks of k=4
-        # three text spans before each media span (3:1, not 2:1)
-        for t in range(3):
-            spans.append({"kind": "text", "text": f"t{i}-{t}", "media_ref": "", "offset": off})
-            off += 1
-        ref = f"gdoc/line-{i}"
-        spans.append({"kind": "line_image", "text": "", "media_ref": ref, "offset": off})
-        off += 1
-        media.append({"media_ref": ref, "content": encode_line_media("gdoc", i, f"w{i}")})
-    # trailing text spans after the last media (must clamp to last chunk)
-    spans.append({"kind": "text", "text": "tail", "media_ref": "", "offset": off})
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("spans", SPAN_TYPE),
-            T.StructField("media", MEDIA_TYPE),
-        ]
+    docs = []
+    # 3 text spans per media, trailing text clamps into the last chunk
+    spans, media = _interleaved(9, text_per_media=3, tail=1)
+    docs.append(("gdoc", spans, media))
+    # duplicate media ref whose second copy is garbage (the last one wins)
+    spans, media = _interleaved(9)
+    docs.append(("dup", spans, media + [("line-4", None)]))
+    # a media span with no media object ("missing media" error span);
+    # the unreferenced "x" keeps the media count, so the chunk count, at 9
+    docs.append(("missing", spans, [m for m in media if m[0] != "line-6"] + [("x", "x")]))
+    # an unreferenced media object
+    docs.append(("unref", spans, media + [("orphan", "o")]))
+    # one ref used by two spans in different chunks
+    docs.append(("shared", spans + [("line_image", "", "line-0", len(spans))], media))
+    # shuffled span order
+    spans, media = _interleaved(9, text_per_media=2, tail=2)
+    random.Random(5).shuffle(spans)
+    docs.append(("shuffled", spans, media))
+    # a heavy row with no media spans: every chunk but the first is empty
+    docs.append(("no_media_spans", [("text", f"t{i}", "", i) for i in range(5)], media))
+    # a chunk count that divides exactly (8 media, k=4)
+    spans, media = _interleaved(8, tail=1)
+    docs.append(("exact", spans, media))
+
+    df = _docs_frame(spark, docs)
+    plain = {r.doc_id: _span_key(r) for r in extract_documents(df).collect()}
+    skew = {
+        r.doc_id: _span_key(r)
+        for r in extract_skew_aware(df, media_per_chunk=4, skew_threshold=2).collect()
+    }
+    assert plain == skew
+    assert plain["gdoc"][1:] == (9, 0)
+    assert plain["dup"][2] == 1 and plain["missing"][2] == 1
+
+
+def test_skew_aware_tied_offsets_are_deterministic(spark):
+    """Spans with equal offsets must land in one chunk: otherwise the
+    reassembly's offset sort keeps the order in which the chunks were
+    collected, which follows the shuffle, and repeated runs disagree
+    with the plain path."""
+    docs = []
+    for d in range(6):
+        spans, media = [], []
+        for i in range(96 + 16 * d):
+            if i % 2 == 0:  # media first in each tie group of 16
+                ref = f"line-{i}"
+                spans.append(("line_image", "", ref, i // 16))
+                media.append((ref, f"w{d}-{i}"))
+            else:
+                spans.append(("text", f"t{d}-{i}", "", i // 16))
+        docs.append((f"tie{d}", spans, media))
+    df = _docs_frame(spark, docs).repartition(3).cache()
+    plain = {r.doc_id: _span_key(r) for r in extract_documents(df).collect()}
+    for _ in range(5):
+        skew = {
+            r.doc_id: _span_key(r)
+            for r in extract_skew_aware(df, media_per_chunk=8, skew_threshold=16).collect()
+        }
+        assert skew == plain
+    df.unpersist()
+
+
+def test_skew_aware_one_very_heavy_document(spark):
+    """One 5,000-media document through the default threshold and
+    chunk size (79 chunks) equals the plain path."""
+    from handprint_spark.corpus import build_doc, is_skewed
+
+    doc_id = "very-heavy"
+    assert not is_skewed(doc_id)
+    _, spans, media = build_doc(doc_id, " ".join(f"w{i % 50}" for i in range(30_000)))
+    assert len(media) == 5_000
+    df = spark.createDataFrame([(doc_id, spans, media)], DOC_SCHEMA)
+    plain = [_span_key(r) for r in extract_documents(df).collect()]
+    skew = [_span_key(r) for r in extract_skew_aware(df).collect()]
+    assert skew == plain
+    assert plain[0][1:] == (5_000, 0)
+
+
+def test_skew_split_shuffles_chunks(spark, sf_tiny):
+    """The chunk rows are hash-shuffled on (doc_id, chunk) before the
+    chunk extraction, so the chunks of one file spread across tasks,
+    and the split has no per-chunk membership scan (array_contains)."""
+    import re
+
+    df = extract_skew_aware(
+        load_documents_spans(spark, sf_tiny), media_per_chunk=16, skew_threshold=40
     )
-    df = spark.createDataFrame([("gdoc", spans, media)], schema)
-    plain = extract_documents(df).collect()[0]
-    skew = extract_skew_aware(df, media_per_chunk=4, skew_threshold=2).collect()[0]
-    key = lambda r: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
-                     r.n_media, r.n_errors)
-    assert key(plain) == key(skew)
-    assert plain.n_media == 9 and plain.n_errors == 0
+    plan = plan_str(df, "simple")
+    assert re.search(
+        r"MapInPandas run\(doc_id#\d+, spans#\d+, media#\d+, chunk#\d+\).*\n"
+        r"\s*\+- Exchange hashpartitioning\(doc_id#\d+, chunk#\d+, \d+\)",
+        plan,
+    )
+    assert "array_contains" not in plan
 
 
 def test_skew_split_actually_triggers(spark, sf_tiny):
