@@ -18,7 +18,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship extraction pipeline on /root/testdata/sf0.001.
 
     documents parquet → deterministic interleaved-span derivation
-    (corpus.spanify) → narrow mapInPandas extraction (normalize chain +
+    (corpus.spanify) → narrow mapInArrow extraction (normalize chain +
     deterministic HTR decode per media span) → exploded span rows
     (doc_id, kind, text, media_ref, offset, n_media, n_errors).
     """

@@ -5,16 +5,18 @@ dataflow (reference manager.py:132-196 outer loop + per-document
 _normalized/_send) as one *narrow* Spark plan:
 
     scan documents_spans
-    → mapInPandas(normalize ∘ decode over media spans) → sink
+    → mapInArrow(normalize ∘ decode over media spans) → sink
 
 Design notes for 100 TB (SURVEY.md §4):
   * Zero shuffles in the hot path. The span array stays nested — one
     row per document end-to-end — so there is no explode/groupBy
     round-trip; the per-doc work is embarrassingly parallel exactly
     like the reference's per-document loop, but across executors.
-  * All Python crossings are Arrow-batched (mapInPandas); batch size
-    bounded by spark.sql.execution.arrow.maxRecordsPerBatch because
-    rows carry media BLOBs.
+  * The one Python crossing is Arrow-native (mapInArrow, no pandas
+    conversion); batch size bounded by
+    spark.sql.execution.arrow.maxRecordsPerBatch because rows carry
+    media BLOBs. Inside a batch the span pass is columnar; Python runs
+    only per media object, for the HPM1 verify and decode.
   * Errors are span values (kind='error'), never exceptions — the
     reference's row-vs-job error policy (amazon.py:66-79).
   * Determinism: every stage is a pure function of the input row, so
@@ -35,6 +37,9 @@ from __future__ import annotations
 
 from typing import Iterator, Optional
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,6 +60,21 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
+def _media_outcome(ref: Optional[str], content: Optional[bytes]) -> tuple[str, str]:
+    """The one per-media decision, shared by ``extract_one`` and the
+    columnar kernel: ``(kind, text)`` of the span that replaces a media
+    span whose object is ``content`` (None when the document has no
+    object for ``ref`` or its content is null)."""
+    if content is None:
+        return "error", f"missing media: {ref}"
+    # every normalize stage is text-invariant, so the span equals the
+    # normalize-then-decode chain's (test_extract_pipeline)
+    text, err = decode_media_text(content)
+    if err is not None:
+        return "error", err
+    return "ocr", page_text(text)
+
+
 def extract_one(
     doc_id: str,
     spans: list,
@@ -63,60 +83,111 @@ def extract_one(
     max_width: Optional[int],
     max_height: Optional[int],
 ) -> tuple[str, list, int, int]:
-    """Pure per-document kernel — also runs sequentially on the driver
-    as the reference path of the span-sequence-equality tests.
+    """Pure per-document kernel: the sequential reference path that the
+    span-sequence-equality tests compare ``extract_documents`` against.
 
-    ``max_size``, ``max_width`` and ``max_height`` are unused
-    (``extract_documents`` passes ``None``): the normalize stages are
-    text-invariant by construction — the reference RESIZES oversized
-    media rather than rejecting it (images.py:149-157), so no limit
-    value can change the decoded text or the error surface (proved by
+    ``max_size``, ``max_width`` and ``max_height`` are unused: the
+    normalize stages are text-invariant by construction — the
+    reference RESIZES oversized media rather than rejecting it
+    (images.py:149-157), so no limit value can change the decoded text
+    or the error surface (proved by
     test_fused_decode_equals_normalize_then_decode)."""
-    # ``media``/``spans`` may arrive as numpy arrays from Arrow — avoid
-    # truthiness on them.
     media_map = {m["media_ref"]: m["content"] for m in (media if media is not None else [])}
     out, n_media, n_errors = [], 0, 0
     for span in sorted(spans if spans is not None else [], key=lambda s: s["offset"]):
         kind, text, ref, offset = span["kind"], span["text"], span["media_ref"], span["offset"]
         if kind in MEDIA_KINDS:
             n_media += 1
-            content = media_map.get(ref)
-            if content is None:
-                out.append({"kind": "error", "text": f"missing media: {ref}",
-                            "media_ref": ref, "offset": offset})
-                n_errors += 1
-                continue
-            # every normalize stage is text-invariant, so the span equals
-            # the normalize-then-decode chain's (test_extract_pipeline)
-            text_out, err = decode_media_text(content)
-            if err is not None:
-                out.append({"kind": "error", "text": err, "media_ref": ref, "offset": offset})
-                n_errors += 1
-            else:
-                out.append({"kind": "ocr", "text": page_text(text_out),
-                            "media_ref": ref, "offset": offset})
-        else:
-            out.append({"kind": kind, "text": text, "media_ref": ref, "offset": offset})
+            kind, text = _media_outcome(ref, media_map.get(ref))
+            n_errors += kind == "error"
+        out.append({"kind": kind, "text": text, "media_ref": ref, "offset": offset})
     return (doc_id, out, n_media, n_errors)
 
 
+def _extract_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """Columnar ``extract_one`` over one Arrow batch of documents.
+
+    Spans and media are flattened once with their row indices; spans
+    are stable-sorted by (row, offset); each media span is resolved to
+    its document's object by a (row, media_ref) key, the last duplicate
+    winning as in ``extract_one``'s dict. Python runs once per distinct
+    media object a span resolves to (and once per media span with no
+    object), never per span or per row; only the media spans' kind and
+    text are rewritten."""
+    n = batch.num_rows
+    spans, media = batch.column("spans"), batch.column("media")
+    lengths = pc.fill_null(pc.list_value_length(spans), 0).to_numpy()
+    flat = spans.flatten()
+    rows = np.repeat(np.arange(n), lengths)
+    order = pc.sort_indices(
+        pa.table({"row": rows, "offset": pc.struct_field(flat, "offset")}),
+        [("row", "ascending"), ("offset", "ascending")],
+    )
+    flat, rows = flat.take(order), rows[order.to_numpy()]
+    kind, text, ref, offset = (pc.struct_field(flat, f) for f in SPAN_TYPE.elementType.names)
+
+    is_media = pc.fill_null(pc.is_in(kind, pa.array(MEDIA_KINDS)), False)
+    at = np.flatnonzero(is_media.to_numpy(zero_copy_only=False))
+    media_rows = rows[at]
+    n_media = np.bincount(media_rows, minlength=n)
+    n_errors = np.zeros(n, dtype=np.int64)
+    if len(at):
+        span_ref = ref.take(at)
+        mflat = media.flatten()
+        obj_ref, content = pc.struct_field(mflat, "media_ref"), pc.struct_field(mflat, "content")
+        # one integer key per (row, media_ref) on both sides; a null ref
+        # is a key of its own, as None is in extract_one's dict
+        codes = pc.dictionary_encode(pa.concat_arrays([span_ref, obj_ref]), null_encoding="encode")
+        obj_rows = np.repeat(np.arange(n), pc.fill_null(pc.list_value_length(media), 0).to_numpy())
+        keys = np.concatenate([media_rows, obj_rows]) * len(codes.dictionary)
+        keys += codes.indices.to_numpy()
+        span_key, obj_key = keys[: len(at)], keys[len(at) :]
+        # the last object of each key wins: its first hit in the
+        # reversed keys; a span with no object is a case of its own
+        uniq, rev_at = np.unique(obj_key[::-1], return_index=True)
+        pos = np.searchsorted(uniq, span_key)
+        found = pos < len(uniq)
+        found[found] = uniq[pos[found]] == span_key[found]
+        case = -1 - np.arange(len(at))
+        case[found] = (len(obj_key) - 1 - rev_at)[pos[found]]
+        cases, case_span, inv = np.unique(case, return_index=True, return_inverse=True)
+        outcomes = [
+            _media_outcome(r, c)
+            for r, c in zip(
+                span_ref.take(case_span).to_pylist(),
+                content.take(pa.array(cases, mask=cases < 0)).to_pylist(),
+            )
+        ]
+        new_kind = np.array([k for k, _ in outcomes], dtype=object)[inv]
+        new_text = np.array([t for _, t in outcomes], dtype=object)[inv]
+        kind = pc.replace_with_mask(kind, is_media, pa.array(new_kind, type=kind.type))
+        text = pc.replace_with_mask(text, is_media, pa.array(new_text, type=text.type))
+        n_errors = np.bincount(media_rows[new_kind == "error"], minlength=n)
+
+    out = pa.StructArray.from_arrays([kind, text, ref, offset], names=SPAN_TYPE.elementType.names)
+    offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]), pa.int32())
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("doc_id"),
+            pa.ListArray.from_arrays(offsets, out),
+            pa.array(n_media, pa.int32()),
+            pa.array(n_errors, pa.int32()),
+        ],
+        names=RESULT_SCHEMA.names,
+    )
+
+
 def extract_documents(df: DataFrame) -> DataFrame:
-    """documents_spans(doc_id, spans, media) -> results. The narrow
-    plan inherits the input's partitioning; repartition first
+    """documents_spans(doc_id, spans, media) -> results. The kernel
+    reads doc_id/spans/media by name and ignores other columns. The
+    narrow plan inherits the input's partitioning; repartition first
     (``plans.partitioning.repartition_by_doc``) when the source's
     file-split parallelism is poor or skewed."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return map(_extract_batch, batches)
 
-        for pdf in batches:
-            rows = [
-                extract_one(d, s, m, None, None, None)
-                for d, s, m in zip(pdf["doc_id"], pdf["spans"], pdf["media"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "spans", "n_media", "n_errors"])
-
-    return df.mapInPandas(run, RESULT_SCHEMA)
+    return df.mapInArrow(run, RESULT_SCHEMA)
 
 
 def observed(results: DataFrame, observation=None) -> DataFrame:

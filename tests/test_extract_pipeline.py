@@ -220,6 +220,91 @@ def _ocr_span(data, max_size, mw, mh):
     return out[0]
 
 
+def _kernel_layout(i):
+    """Document layout ``i % 16`` for the columnar-kernel test: spans as
+    (kind, text, media_ref, offset) tuples and media as (ref, content)
+    pairs, either of them possibly None."""
+    from handprint_spark.kernels.codec import encode_media
+
+    def good(text):
+        return encode_media(f"{text} r{i}", width=32, height=16)
+
+    page = ("page_image", None, "p", 1)
+    layouts = [
+        # a duplicate media_ref: good then garbage, garbage then good
+        ([("text", "a", None, 0), page], [("p", good("one")), ("p", b"garbage")]),
+        ([page], [("p", b"garbage"), ("p", good("two"))]),
+        # a media span with no media object
+        ([page, ("line_image", None, "q", 2)], [("p", good("x"))]),
+        # null content, and b"" content
+        ([page], [("p", None)]),
+        ([page], [("p", b"")]),
+        # an unreferenced media object
+        ([("text", "only", None, 0)], [("p", good("unused"))]),
+        # null spans, null media, and empty lists
+        (None, [("p", good("x"))]),
+        ([page], None),
+        ([], []),
+        # shuffled offsets with ties and an unknown non-media kind
+        ([("text", "c", None, 3), ("word_image", None, "w", 1), ("note", "n", None, 1),
+          ("text", "b", None, 1), ("line_image", None, "l", 0)],
+         [("l", good("l")), ("w", good("w"))]),
+        # one ref used by two spans
+        ([("line_image", None, "l", 0), ("text", "mid", None, 1), ("line_image", None, "l", 2)],
+         [("l", good("twice"))]),
+        # a null kind
+        ([(None, "k", "p", 0), page], [("p", good("k"))]),
+        # a null media_ref matching a null-ref media object
+        ([("page_image", None, None, 0)], [(None, good("null ref"))]),
+        # non-ASCII text, and truncated media
+        ([("text", "ümlaut Ø 日本", None, 0), page], [("p", good("naïve façade"))]),
+        ([page], [("p", good("cut")[:30])]),
+        # all three MEDIA_KINDS
+        ([("page_image", None, "a", 0), ("line_image", None, "b", 1),
+          ("word_image", None, "c", 2)],
+         [("c", good("c")), ("b", good("b")), ("a", good("a"))]),
+    ]
+    return layouts[i % len(layouts)]
+
+
+def test_columnar_kernel_equals_reference(spark):
+    """extract_documents' Arrow kernel equals extract_one per doc_id
+    (spans, n_media, n_errors) over 200 documents cycling through the
+    layouts of _kernel_layout, spread so several 64-row Arrow batches
+    are crossed."""
+    from pyspark.sql import types as T
+
+    from handprint_spark.corpus import MEDIA_TYPE, SPAN_TYPE
+
+    fields = SPAN_TYPE.elementType.names
+    rows = []
+    for i in range(200):
+        spans, media = _kernel_layout(i)
+        rows.append((
+            f"doc-{i:03d}",
+            None if spans is None else [dict(zip(fields, s)) for s in spans],
+            None if media is None else [{"media_ref": r, "content": c} for r, c in media],
+        ))
+    schema = T.StructType([
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("spans", SPAN_TYPE),
+        T.StructField("media", MEDIA_TYPE),
+    ])
+    results = extract_documents(spark.createDataFrame(rows, schema).repartition(3))
+    plan = results._sc._jvm.PythonSQLUtils.explainString(
+        results._jdf.queryExecution(), "simple"
+    )
+    assert "MapInArrow" in plan and "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+    got = {
+        r.doc_id: ([tuple(s) for s in r.spans], r.n_media, r.n_errors)
+        for r in results.collect()
+    }
+    assert len(got) == len(rows)
+    for doc_id, spans, media in rows:
+        _, exp, n_media, n_errors = extract_one(doc_id, spans, media, None, None, None)
+        assert got[doc_id] == ([tuple(s.values()) for s in exp], n_media, n_errors), doc_id
+
+
 def test_spanify_empty_text_matches_python_twin(spark):
     """Empty / whitespace-only / formfeed-only documents produce ZERO
     spans on both the Spark path (spanify) and the Python twin

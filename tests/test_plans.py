@@ -210,7 +210,7 @@ def test_skew_split_shuffles_chunks(spark, sf_tiny):
     )
     plan = plan_str(df, "simple")
     assert re.search(
-        r"MapInPandas run\(doc_id#\d+, spans#\d+, media#\d+, chunk#\d+\).*\n"
+        r"MapInArrow run\(doc_id#\d+, spans#\d+, media#\d+, chunk#\d+\).*\n"
         r"\s*\+- Exchange hashpartitioning\(doc_id#\d+, chunk#\d+, \d+\)",
         plan,
     )

@@ -11,7 +11,8 @@ reaches a driver run):
   scalar attach or a deliberate constant-size fan-out (allowlist).
 - no row-at-a-time Python: `BatchEvalPython` (pickled per-row UDF
   eval) never appears — every Python crossing must be Arrow-batched
-  (`ArrowEvalPython` / `MapInPandas` / `FlatMapGroupsInPandas`).
+  (`ArrowEvalPython` / `MapInPandas` / `MapInArrow` /
+  `FlatMapGroupsInPandas`).
 
 Also lints the driver-compare contract: no duplicate column names
 (the driver's value-hash sorts columns by name, so duplicates would
